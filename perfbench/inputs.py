@@ -11,7 +11,7 @@ Kinds:
   (5-60 paragraphs), 2% recrawled urls, a 0.1% tail of 1.5-5 MB mega-pages
   and one page over the 8 MiB cap. Which pages are recrawled, mega or over
   the cap comes from the seed. Truth: the oracle's sha256 of the extracted
-  text of the latest capture per url, and the anchors each url carries.
+  text of the latest capture per url.
 - ``warc``: member-gzipped WARC/1.0 shards of short pages (1-5 paragraphs),
   each url captured 2-4 times in different shards, request records
   interleaved, ~1% of the shards truncated mid-record. Truth: the oracle
@@ -36,7 +36,7 @@ import shutil
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-GEN_VERSION = 3
+GEN_VERSION = 4
 N_FILES = 8  # parquet files per table: the scan splits into this many tasks
 EPOCH = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
 CRLF = b"\r\n"
@@ -70,14 +70,12 @@ def _id_base(seed: int) -> int:
 
 
 def _web_page(task: tuple) -> tuple:
-    """(doc_id, mega, over_cap) -> (html, oracle digest, anchor count)."""
+    """(doc_id, mega, over_cap) -> (html, oracle digest)."""
     from sparkdu.fixtures import gen_page_html
 
     doc_id, mega, over_cap = task
     html = gen_page_html(doc_id, mega=mega, over_cap=over_cap)
-    # every anchor the template writes closes with </a>, and nothing else
-    # does; a page cut mid-anchor leaves an unclosed one that counts nowhere
-    return html, _oracle_digest(html), html.count(b"</a>")
+    return html, _oracle_digest(html)
 
 
 def _mega_size(doc_id: int) -> tuple:
@@ -113,39 +111,19 @@ def _gen_web(seed: int, n: int, pool) -> tuple:
     # (row, doc id, recrawl?): a recrawl repeats its row's url a day later
     rows = [(i, mega_docs.get(i, base + i), False) for i in range(n_main)]
     rows += [(i, base + n_main + j, True) for j, i in enumerate(recrawled)]
-    # the over-cap page first, then the mega-pages, then the rest: cut into
-    # files of equal bytes below, the over-cap page sits alone in the first
-    tail = [over_cap] + mega_rows
-    ordered = [rows[i] for i in tail] + [r for k, r in enumerate(rows) if k not in set(tail)]
-    tasks = [(doc, i in mega_docs, i == over_cap) for i, doc, _ in ordered]
+    tasks = [(doc, i in mega_docs, i == over_cap) for i, doc, _ in rows]
     made = pool.map(_web_page, tasks, chunksize=16)
     urls, ts, htmls = [], [], []
-    latest, anchors = {}, {}
-    for (i, _doc, recrawl), (html, dig, n_a) in zip(ordered, made):
+    latest = {}
+    for (i, _doc, recrawl), (html, dig) in zip(rows, made):
         url = f"https://site{i % 20}.example/{base + i:x}"
         urls.append(url)
         ts.append(EPOCH + dt.timedelta(minutes=i, days=int(recrawl)))
         htmls.append(html)
         if recrawl or url not in latest:
             latest[url] = dig
-        anchors[url] = anchors.get(url, 0) + n_a
-    table = pa.table([urls, ts, htmls], schema=PAGES_ARROW)
-    # files of equal bytes: scan tasks are even, so a shuffle-free job over
-    # the corpus (run_wat_job) is set by parallel work, not by one task's
-    # regexes over the 13.5 MB page plus a full file of other pages
-    target = sum(map(len, htmls)) / (2 * N_FILES)
-    files, start, acc = [], 0, 0
-    for k, h in enumerate(htmls):
-        acc += len(h)
-        if acc >= target:
-            files.append(table.slice(start, k + 1 - start))
-            start, acc = k + 1, 0
-    if start < n:
-        files.append(table.slice(start))
-    truth = {"n_rows": n, "n_urls": len(latest), "n_mega": n_mega,
-             "html_bytes": sum(map(len, htmls)),
-             "digests": latest, "anchors": anchors}
-    return {"pages": files}, truth
+    files = _split(pa.table([urls, ts, htmls], schema=PAGES_ARROW))
+    return {"pages": files}, {"n_rows": n, "digests": latest}
 
 
 # ---------------------------------------------------------------- warc
@@ -222,8 +200,7 @@ def _gen_warc(seed: int, n_urls: int, pool) -> tuple:
     n_valid = sum(1 for sid, *_ in captures if sid not in corrupt)
     files = _split(pa.table([list(range(n_shards)), payloads], schema=SHARDS_ARROW))
     truth = {"n_shards": n_shards, "n_corrupt": len(corrupt),
-             "n_captures": len(captures), "n_valid_captures": n_valid,
-             "n_urls": len(latest), "digests": digests}
+             "n_valid_captures": n_valid, "digests": digests}
     return {"shards": files}, truth
 
 

@@ -14,6 +14,7 @@ See perfbench/README.md for the workloads and what each metric means.
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import platform
@@ -99,10 +100,10 @@ def configure(host: dict) -> dict:
     for d in (local, tmp):
         os.makedirs(d, exist_ok=True)
     # an eighth of physical memory, 1-4 GiB: sparkdu's default heap of 16g
-    # is OOM-killed on a 15 GB host. The heap is committed and touched at
-    # start, so the JVM's high-water RSS does not depend on when the
-    # collector chose to grow it; what moves peak_rss_mb is memory outside
-    # the heap and in the Python workers.
+    # is OOM-killed on a 15 GB host. The heap is committed at start but not
+    # touched, so the JVM's high-water RSS counts the heap pages the run
+    # used, and heap demand moves peak_rss_mb. A fixed young generation
+    # keeps the collector's adaptive sizing from moving it run to run.
     heap_mb = max(1024, min(4096, host["mem_total_mb"] // 8))
     env = {
         "SPARKDU_MASTER": f"local[{host['nproc']}]",
@@ -115,7 +116,7 @@ def configure(host: dict) -> dict:
             [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]),
         "PYSPARK_SUBMIT_ARGS": (
             f'--driver-java-options "-Djava.io.tmpdir={tmp} -Xms{heap_mb}m '
-            '-XX:+AlwaysPreTouch" --conf spark.ui.showConsoleProgress=false pyspark-shell'),
+            f'-Xmn{heap_mb // 4}m" --conf spark.ui.showConsoleProgress=false pyspark-shell'),
     }
     os.environ.update(env)
     return env
@@ -128,14 +129,18 @@ def iqr_share(values: list[float]) -> float:
     return (q3 - q1) / q2 if q2 else 0.0
 
 
-def closed_loop(wl, seconds: float, min_jobs: int = MIN_JOBS) -> list[float]:
-    """Back-to-back jobs, one in flight, until ``seconds`` have passed."""
+def closed_loop(wl, seconds: float, spans=None,
+                around=contextlib.nullcontext) -> list[float]:
+    """Back-to-back jobs, one in flight, until ``seconds`` have passed and
+    at least MIN_JOBS jobs ran. Each job gets ``spans``; ``around()`` wraps
+    each job outside its timed wall."""
     walls = []
     t_end = time.perf_counter() + seconds
-    while len(walls) < min_jobs or time.perf_counter() < t_end:
-        t0 = time.perf_counter()
-        wl.job()
-        walls.append(time.perf_counter() - t0)
+    while len(walls) < MIN_JOBS or time.perf_counter() < t_end:
+        with around():
+            t0 = time.perf_counter()
+            wl.job(spans)
+            walls.append(time.perf_counter() - t0)
     return walls
 
 
@@ -214,7 +219,6 @@ def measure(args, host: dict, report: dict) -> dict:
         report["versions"] = {"spark": spark.version, "pyarrow": __import__("pyarrow").__version__}
 
         wl.check_job()
-        closed_loop(wl, wl.warmup_s, min_jobs=0)
         job0 = observe.last_job_id(spark)
         walls = closed_loop(wl, args.seconds)
         docs_per_s = [wl.docs() / w for w in walls]
@@ -251,16 +255,17 @@ def trace(args, spark, wl, observe, snapshots, e2e: dict, get_spark_s, report) -
     spans = observe.Spans(f"{args.workload}-s{args.seed}")
     exec0 = observe.last_execution_id(spark)
     gc0 = observe.gc_seconds(spark)
-    walls, stages_by_job = [], []
-    t_end = time.perf_counter() + args.seconds
+    stages_by_job = []
+
+    @contextlib.contextmanager
+    def capture_stages():
+        job0 = observe.last_job_id(spark)
+        yield
+        stages_by_job.append(observe.stage_tasks(spark, job0))
+
     with observe.wrapped(snapshots, "commit_wave_snapshot", spans,
                          "snapshots.commit_wave_snapshot"):
-        while len(walls) < MIN_JOBS or time.perf_counter() < t_end:
-            job0 = observe.last_job_id(spark)
-            t0 = time.perf_counter()
-            wl.job(spans)
-            walls.append(time.perf_counter() - t0)
-            stages_by_job.append(observe.stage_tasks(spark, job0))
+        walls = closed_loop(wl, args.seconds, spans, capture_stages)
     gc_s = observe.gc_seconds(spark) - gc0
     execs = observe.sql_metrics(spark, exec0)
     n = len(walls)

@@ -61,7 +61,6 @@ def _median_us(fn, items) -> float:
 class Workload:
     kind = ""          # corpus kind in inputs.py
     size = 0           # default corpus size
-    warmup_s = 0.0     # untimed full-size jobs after check_job, before timing
 
     def __init__(self, spark, corpus: dict, out_root: str):
         self.spark = spark
