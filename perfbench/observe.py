@@ -182,7 +182,7 @@ def _status_kb(pid: int, key: str) -> int:
     return 0
 
 
-def _descendants(root: int) -> list[int]:
+def descendants(root: int) -> list[int]:
     children: dict[int, list[int]] = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
@@ -206,7 +206,7 @@ def peak_rss_mb(jvm_pid: int) -> dict:
     """VmHWM in MB of the driver JVM, and summed over every process below
     it (the Python worker daemon and its forked workers)."""
     out = {"jvm": 0.0, "workers": 0.0}
-    for pid in _descendants(jvm_pid):
+    for pid in descendants(jvm_pid):
         try:
             out["jvm" if pid == jvm_pid else "workers"] += _status_kb(pid, "VmHWM") / 1024.0
         except OSError:

@@ -1,6 +1,6 @@
 """sparkdu benchmark: one workload, one seed, one closed loop.
 
-    python3 perfbench/run.py --workload extract_web --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload extract_web --seed 1 --seconds 12 --trace 0
 
 Run from the repository root. The last stdout line is one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``: the end-to-end metrics
@@ -15,11 +15,14 @@ from __future__ import annotations
 
 import argparse
 import contextlib
+import ctypes
 import json
 import os
 import platform
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import time
 import traceback
@@ -122,6 +125,46 @@ def configure(host: dict) -> dict:
     return env
 
 
+def adopt_orphans() -> None:
+    """Make this process the reaper of its orphaned descendants (Linux
+    PR_SET_CHILD_SUBREAPER), so that stop_children can wait for every
+    process the run started, grandchildren included."""
+    ctypes.CDLL(None, use_errno=True).prctl(36, 1, 0, 0, 0)
+
+
+def stop_children(grace_s: float = 30.0) -> None:
+    """End every process the run started and wait until each has ended.
+    The Spark JVM exits when its stdin closes and stops its Python workers
+    itself; multiprocessing's resource tracker exits when its pipe closes;
+    whatever is left gets SIGTERM, then SIGKILL after ``grace_s``."""
+    import observe
+
+    context = sys.modules.get("pyspark.context")
+    gateway = context.SparkContext._gateway if context else None
+    proc = getattr(gateway, "proc", None)
+    if proc is not None:
+        proc.stdin.close()
+        with contextlib.suppress(subprocess.TimeoutExpired):
+            proc.wait(grace_s)
+    tracker = sys.modules.get("multiprocessing.resource_tracker")
+    if tracker is not None:
+        with contextlib.suppress(Exception):
+            tracker._resource_tracker._stop()
+    deadline = time.monotonic() + grace_s
+    while True:
+        with contextlib.suppress(ChildProcessError):
+            while os.waitpid(-1, os.WNOHANG)[0]:
+                pass
+        pids = observe.descendants(os.getpid())[1:]
+        if not pids:
+            return
+        sig = signal.SIGTERM if time.monotonic() < deadline else signal.SIGKILL
+        for pid in pids:
+            with contextlib.suppress(ProcessLookupError):
+                os.kill(pid, sig)
+        time.sleep(0.2)
+
+
 def iqr_share(values: list[float]) -> float:
     if len(values) < 2:
         return 0.0
@@ -133,10 +176,12 @@ def closed_loop(wl, seconds: float, spans=None,
                 around=contextlib.nullcontext) -> list[float]:
     """Back-to-back jobs, one in flight, until ``seconds`` have passed and
     at least MIN_JOBS jobs ran. Each job gets ``spans``; ``around()`` wraps
-    each job outside its timed wall."""
+    each job outside its timed wall. The last job's output is deleted
+    before the clock starts."""
     walls = []
     t_end = time.perf_counter() + seconds
     while len(walls) < MIN_JOBS or time.perf_counter() < t_end:
+        wl.clear_output()
         with around():
             t0 = time.perf_counter()
             wl.job(spans)
@@ -307,6 +352,7 @@ def main(argv=None) -> int:
               "run from a full sparkdu checkout", file=sys.stderr)
         return 2
     sys.path.insert(0, ROOT)
+    adopt_orphans()
     host = host_shape()
     env = configure(host)
     report = {"workload": args.workload, "seed": args.seed, "seconds": args.seconds,
@@ -317,6 +363,8 @@ def main(argv=None) -> int:
         traceback.print_exc()
         print(json.dumps({"report": report}, default=str))
         return 1
+    finally:
+        stop_children()
     units = PER_LAYER if args.trace else END_TO_END
     result["metrics"] = {k: {"value": result["metrics"][k], "unit": u}
                          for k, u in units.items()}

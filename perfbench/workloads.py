@@ -71,9 +71,15 @@ class Workload:
         self.last_out = None
         self.parts = 4 * spark.sparkContext.defaultParallelism
 
-    def _next_out(self) -> str:
+    def clear_output(self) -> None:
+        """Delete the last job's output. The timed loop calls this before it
+        starts a job's clock: deleting files here is slow and uneven from one
+        job to the next, and it is not work of the program."""
         if self.last_out:
             shutil.rmtree(self.last_out, ignore_errors=True)
+
+    def _next_out(self) -> str:
+        self.clear_output()
         self.n_jobs += 1
         self.last_out = os.path.join(self.out_root, f"job{self.n_jobs}")
         return self.last_out
