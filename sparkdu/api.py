@@ -1,8 +1,14 @@
 """sparkdu public API — the extraction pipeline, Catalyst-shaped (SURVEY SS3.4).
 
-Fast path (one Python crossing, SURVEY SS4.3): pages -> salted repartition ->
-``mapInArrow(fused extract)`` -> extracted, with J9 dedup performed
-statefully inside the UDF over sorted partitions. The staged path (operators
+Every extraction leg is one Python crossing: pages -> salted repartition ->
+sortWithinPartitions -> ``mapInArrow`` -> extracted rows. Inside the crossing
+one batch loop, `extract_batches`, serves the flagship (`extract_pages`), the
+streaming drains (streaming.py) and the wave-committed lineage job
+(lineage.run_extract_job) over HTML, PAGE-XML and PDF input. It keeps the
+first row of every url run (J9 over the sorted partition), hands each payload
+to a per-document function with one contract — payload -> (text, n_blocks,
+spans, n_nodes), or None / an exception when the document fails — and emits
+the columns of the schema its caller passes. The staged path (operators
 S2/P*/W*/D3 as separate DataFrame stages) lives in staged.py and must produce
 byte-identical output (differential test T3).
 
@@ -20,6 +26,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
+from functools import partial
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -29,33 +36,6 @@ from pyspark.sql import functions as F
 
 from . import parse as P
 from .tables import EXTRACTED_SCHEMA, NODES_SCHEMA
-
-SPAN_ARROW = pa.list_(
-    pa.struct([("node_id", pa.int32()), ("start", pa.int64()), ("end", pa.int64())])
-)
-
-
-def _span_list_array(pa_mod, span_lists):
-    """list-of-(nid,start,end)-tuples per row -> Arrow list<struct> column,
-    built from flat arrays (no per-span python dicts)."""
-    s_nid, s_start, s_end, offsets = [], [], [], [0]
-    for sp in span_lists:
-        for nid, st, en in sp:
-            s_nid.append(nid)
-            s_start.append(st)
-            s_end.append(en)
-        offsets.append(len(s_nid))
-    return pa_mod.ListArray.from_arrays(
-        pa_mod.array(offsets, pa_mod.int32()),
-        pa_mod.StructArray.from_arrays(
-            [
-                pa_mod.array(s_nid, pa_mod.int32()),
-                pa_mod.array(s_start, pa_mod.int64()),
-                pa_mod.array(s_end, pa_mod.int64()),
-            ],
-            names=["node_id", "start", "end"],
-        ),
-    )
 
 
 @dataclass(frozen=True)
@@ -93,6 +73,13 @@ def _load_model(path: Optional[str]):
     return _MODEL_CACHE[path]
 
 
+def latest_first() -> list:
+    """J9 keep-latest order within one url: newest capture first, ties on
+    warc_ts broken by xxhash64(html) so the kept row is deterministic
+    (SURVEY SS4.4). Every keep-latest site sorts or windows by it."""
+    return [F.col("warc_ts").desc(), F.xxhash64("html").desc()]
+
+
 def dedup_latest(pages: DataFrame) -> DataFrame:
     """J9: crawls repeat urls; keep the row with max warc_ts per url.
 
@@ -101,9 +88,7 @@ def dedup_latest(pages: DataFrame) -> DataFrame:
     Mirrors corpus-side dedup concern [B:6]; reference has no analogue
     (collections are pre-deduped on disk).
     """
-    w = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc(), F.xxhash64("html").desc()
-    )
+    w = Window.partitionBy("url").orderBy(*latest_first())
     return (
         pages.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -154,44 +139,51 @@ def _dedup_record_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Reco
         yield rb
 
 
-def fused_extract_udf(cfg: ExtractConfig):
-    """D1: the single Python crossing — (dedup)→decode→parse→classify→order
-    →assemble, Arrow-batch in / Arrow-batch out.
+_FAILED_DOC = ("", 0, (), 0)
 
-    Iterator-of-batches form so the model artifact loads once per task, not
-    per batch. Mirrors the reference's whole per-doc loop
-    [U tasks/DU_Task --run; graph/Graph.loadGraphs → Model.predict →
-    NodeType.setDocNodeLabel] collapsed into one Arrow stage. url/warc_ts
-    columns pass through as raw Arrow arrays (zero-copy, no tz re-coding).
+
+def extract_batches(batches: Iterator[pa.RecordBatch], doc, version: str,
+                    names: list, dedup: bool) -> Iterator[pa.RecordBatch]:
+    """The extraction batch loop of every leg, Arrow-batch in / Arrow-batch
+    out: (dedup) -> `doc` per payload -> the columns `names`, in order.
+
+    `doc` is the per-document contract: payload -> (extracted_text,
+    n_blocks, spans, n_nodes), spans as (node_id, start, end) tuples. An
+    exception or None marks the document failed: it still yields one row,
+    the empty one with had_error=1, so checkpoint counters account for it.
+    pipeline_version is `version` on every row; n_bytes_in is the payload
+    length (0 for NULL). Columns the loop does not compute (url, warc_ts,
+    partition_key) pass through as raw Arrow arrays (zero-copy, no tz
+    re-coding).
     """
-    model_path = cfg.model_path
-    dedup = cfg.dedup
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        model = _load_model(model_path)
-        if dedup:
-            batches = _dedup_record_batches(batches)
-        for rb in batches:
-            idx = {n: i for i, n in enumerate(rb.schema.names)}
-            texts, n_blocks, versions = [], [], []
-            # spans columnarized flat (one ListArray build per batch instead
-            # of ~n_docs x n_blocks python dicts)
-            s_nid, s_start, s_end, offsets = [], [], [], [0]
-            for html in rb.column(idx["html"]):
-                try:
-                    t, nb, sp, ver = P.extract_doc(html.as_py(), model)
-                except Exception:
-                    t, nb, sp = "", 0, []
-                    ver = P.model_version(model)
-                texts.append(t)
-                n_blocks.append(nb)
-                versions.append(ver)
-                for nid, st, en in sp:
-                    s_nid.append(nid)
-                    s_start.append(st)
-                    s_end.append(en)
-                offsets.append(len(s_nid))
-            span_arr = pa.ListArray.from_arrays(
+    if dedup:
+        batches = _dedup_record_batches(batches)
+    for rb in batches:
+        texts, n_blocks, n_nodes, n_bytes, errors = [], [], [], [], []
+        # spans columnarized flat (one ListArray build per batch instead
+        # of ~n_docs x n_blocks python dicts)
+        s_nid, s_start, s_end, offsets = [], [], [], [0]
+        for scalar in rb.column("html"):
+            payload = scalar.as_py()
+            try:
+                out = doc(payload)
+            except Exception:
+                out = None
+            errors.append(int(out is None))
+            t, nb, sp, nn = out or _FAILED_DOC
+            texts.append(t)
+            n_blocks.append(nb)
+            n_nodes.append(nn)
+            n_bytes.append(0 if payload is None else len(payload))
+            for nid, st, en in sp:
+                s_nid.append(nid)
+                s_start.append(st)
+                s_end.append(en)
+            offsets.append(len(s_nid))
+        computed = {
+            "extracted_text": pa.array(texts, pa.string()),
+            "n_blocks": pa.array(n_blocks, pa.int32()),
+            "spans": pa.ListArray.from_arrays(
                 pa.array(offsets, pa.int32()),
                 pa.StructArray.from_arrays(
                     [
@@ -201,21 +193,76 @@ def fused_extract_udf(cfg: ExtractConfig):
                     ],
                     names=["node_id", "start", "end"],
                 ),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(idx["url"]),
-                    rb.column(idx["warc_ts"]),
-                    pa.array(texts, pa.string()),
-                    pa.array(n_blocks, pa.int32()),
-                    span_arr,
-                    pa.array(versions, pa.string()),
-                ],
-                names=["url", "warc_ts", "extracted_text", "n_blocks",
-                       "spans", "pipeline_version"],
-            )
+            ),
+            "pipeline_version": pa.array([version] * rb.num_rows, pa.string()),
+            "n_nodes": pa.array(n_nodes, pa.int32()),
+            "n_bytes_in": pa.array(n_bytes, pa.int64()),
+            "had_error": pa.array(errors, pa.int32()),
+        }
+        yield pa.RecordBatch.from_arrays(
+            [computed[n] if n in computed else rb.column(n) for n in names],
+            names=names,
+        )
+
+
+NATIVE_VERSIONS = {"pagexml": "pagexml-1.0.0", "pdf": "pdf-1.0.0"}
+
+
+def native_doc(fmt: str):
+    """The per-document function of the PAGE-XML/PDF legs: parse_pagexml /
+    parse_pdf, then the content filter and reading-order assembly of
+    assemble_doc_text (differentially gated against the DataFrame-agg
+    form). None when the parser rejects the document (they fail whole)."""
+    if fmt == "pagexml":
+        from .pagexml import assemble_doc_text, parse_pagexml as parse
+
+        key = "nodes"
+    elif fmt == "pdf":
+        from .pdf import assemble_doc_text, parse_pdf as parse
+
+        key = "runs"
+    else:
+        raise ValueError(f"unknown native format: {fmt!r}")
+
+    def doc(payload):
+        parsed = parse(payload)
+        if parsed is None:
+            return None
+        items = parsed[key]
+        return (*assemble_doc_text(items), len(items))
+
+    return doc
+
+
+def extract_udf(schema, fmt: str = "html", model_path: Optional[str] = None,
+                dedup: bool = True):
+    """The mapInArrow function of every extraction leg: `fmt` input (html |
+    pagexml | pdf) through `extract_batches` to the columns of `schema`.
+
+    Iterator-of-batches form so the model artifact loads once per task, not
+    per batch. For HTML this is D1, the single Python crossing —
+    (dedup)→decode→parse→classify→order→assemble — mirroring the
+    reference's whole per-doc loop [U tasks/DU_Task --run;
+    graph/Graph.loadGraphs → Model.predict → NodeType.setDocNodeLabel]
+    collapsed into one Arrow stage.
+    """
+    names = schema.fieldNames()
+    native = None if fmt == "html" else native_doc(fmt)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        if native is None:
+            model = _load_model(model_path)
+            doc, version = partial(P.extract_doc, model=model), P.model_version(model)
+        else:
+            doc, version = native, NATIVE_VERSIONS[fmt]
+        return extract_batches(batches, doc, version, names, dedup)
 
     return fn
+
+
+def fused_extract_udf(cfg: ExtractConfig):
+    """The flagship's mapInArrow function: HTML pages -> EXTRACTED_SCHEMA."""
+    return extract_udf(EXTRACTED_SCHEMA, model_path=cfg.model_path, dedup=cfg.dedup)
 
 
 def prepare_pages(spark: SparkSession, pages: DataFrame, cfg: ExtractConfig) -> DataFrame:
@@ -224,16 +271,14 @@ def prepare_pages(spark: SparkSession, pages: DataFrame, cfg: ExtractConfig) -> 
     - salt repartition on pmod(xxhash64(url), K): url-local, skew-spreading
       [B:14]; skipped when the source is already bucketed by url.
     - dedup needs url-grouped + sorted rows: sortWithinPartitions piggybacks
-      on the same exchange (local sort, no extra shuffle). Ties on warc_ts
-      broken by xxhash64(html) so the kept row is deterministic (SURVEY SS4.4).
+      on the same exchange (local sort, no extra shuffle), url runs in the
+      `latest_first` order.
     """
     df = pages.select("url", "warc_ts", "html")
     if cfg.salt:
         df = salted_repartition(df, default_partitions(spark, cfg))
     if cfg.dedup:
-        df = df.sortWithinPartitions(
-            F.col("url").asc(), F.col("warc_ts").desc(), F.xxhash64("html").desc()
-        )
+        df = df.sortWithinPartitions(F.col("url").asc(), *latest_first())
     return df
 
 

@@ -413,7 +413,7 @@ def run_incremental_extract(
     the state already contains the batch and the replayed merge is an
     empty no-op over an already-merged table.
     """
-    from .api import ExtractConfig, extract_pages
+    from .api import ExtractConfig, dedup_latest, extract_pages
     from .tables import PAGES_SCHEMA
 
     cur_src = S.current_snapshot_id(src_dir)
@@ -439,17 +439,10 @@ def run_incremental_extract(
     # without arbitration the update batch carries duplicate url keys,
     # merge_upsert raises, and — the checkpoint being written only after the
     # merge — every retry re-reads the same appends and raises again (a
-    # poison increment). Keep the latest capture per url (warc_ts desc,
-    # xxhash64(html) as a deterministic tie-break), mirroring the
-    # dedup_url_canon_latest keep-latest rule. One O(new) shuffle on url.
-    w_arb = Window.partitionBy("url").orderBy(
-        F.col("warc_ts").desc(), F.xxhash64("html").desc()
-    )
-    new_pages = (
-        new_pages.withColumn("_rn", F.row_number().over(w_arb))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    # poison increment). Keep the latest capture per url (J9, the
+    # keep-latest rule dedup_url_canon_latest mirrors). One O(new) shuffle
+    # on url.
+    new_pages = dedup_latest(new_pages)
 
     # persist: the parse UDF is the expensive stage, and BOTH commit paths
     # execute the batch several times (merge's duplicate-key probe, the

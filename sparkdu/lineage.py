@@ -13,8 +13,12 @@ north rule. Design (SURVEY SS4.3 item 4):
   same run_id. On Iceberg, each wave is one snapshot commit; locally each
   wave is a dynamic-partition parquet overwrite.
 
-The fused UDF variant here additionally emits per-row parse metrics
-(n_nodes, had_error) that aggregate into the checkpoint counters.
+A wave extracts through the flagship's batch loop (api.extract_udf) for
+HTML, PAGE-XML and PDF alike; its EXTRACTED_LINEAGE_SCHEMA adds the
+per-row metrics (partition_key, n_nodes, n_bytes_in, had_error) that
+aggregate into the checkpoint counters. The native legs synthesize
+url/warc_ts from doc_id and carry the payload in the `html` column, so the
+wave machinery (salting, J9 sort, checkpoints, resume) is shared verbatim.
 """
 
 from __future__ import annotations
@@ -22,28 +26,18 @@ from __future__ import annotations
 import datetime as _dt
 import os
 from dataclasses import dataclass
-from typing import Iterator, Optional
+from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import parse as P
-from .api import _load_model
+from .api import extract_udf, latest_first
+from .tables import EXTRACTED_SCHEMA
 
 EXTRACTED_LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("n_blocks", T.IntegerType()),
-        T.StructField("spans", T.ArrayType(T.StructType([
-            T.StructField("node_id", T.IntegerType()),
-            T.StructField("start", T.LongType()),
-            T.StructField("end", T.LongType()),
-        ]))),
-        T.StructField("pipeline_version", T.StringType()),
+    EXTRACTED_SCHEMA.fields
+    + [
         T.StructField("partition_key", T.IntegerType()),
         T.StructField("n_nodes", T.IntegerType()),
         T.StructField("n_bytes_in", T.LongType()),
@@ -62,157 +56,6 @@ class ExtractJobConfig:
     resume: bool = False
     fail_after_waves: Optional[int] = None  # test hook (T5 failure injection)
     input_format: str = "html"        # html | pagexml | pdf (native legs)
-
-
-def _extract_doc_metrics(html, model):
-    s, truncated = P.sniff_decode(html)
-    err = 0
-    try:
-        blocks = P.parse_blocks(s)
-    except Exception:
-        blocks, err = [], 1
-    blocks.sort(key=lambda r: r[0])
-    n_nodes = len(blocks)
-    if model is not None:
-        keep = P._score_blocks(blocks, model)
-    else:
-        keep = [P.rule_is_content(r[7], r[11]) for r in blocks]
-    ver = P.model_version(model)
-    parts, spans, off = [], [], 0
-    for r, k in zip(blocks, keep):
-        if not k:
-            continue
-        n = r[5]
-        spans.append((r[0], off, off + n))
-        parts.append(r[4])
-        off += n + 1
-    if truncated:
-        parts.append(P.TRUNCATION_MARKER)
-    return "\n".join(parts), len(spans), spans, ver, n_nodes, err
-
-
-def lineage_extract_udf(model_path: Optional[str], dedup: bool = True):
-    import pyarrow as pa
-
-    from .api import _dedup_record_batches, _span_list_array
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        model = _load_model(model_path)
-        if dedup:
-            batches = _dedup_record_batches(batches)
-        for rb in batches:
-            idx = {n: i for i, n in enumerate(rb.schema.names)}
-            out = {k: [] for k in ("extracted_text", "n_blocks", "spans",
-                                   "pipeline_version", "n_nodes", "n_bytes_in", "had_error")}
-            for h in rb.column(idx["html"]):
-                html = h.as_py()
-                try:
-                    txt, nb, sp, ver, nn, err = _extract_doc_metrics(html, model)
-                except Exception:
-                    txt, nb, sp, nn, err = "", 0, [], 0, 1
-                    ver = P.model_version(model)
-                out["extracted_text"].append(txt)
-                out["n_blocks"].append(nb)
-                out["spans"].append(sp)
-                out["pipeline_version"].append(ver)
-                out["n_nodes"].append(nn)
-                out["n_bytes_in"].append(len(html) if html is not None else 0)
-                out["had_error"].append(err)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(idx["url"]),
-                    rb.column(idx["warc_ts"]),
-                    pa.array(out["extracted_text"], pa.string()),
-                    pa.array(out["n_blocks"], pa.int32()),
-                    _span_list_array(pa, out["spans"]),
-                    pa.array(out["pipeline_version"], pa.string()),
-                    rb.column(idx["partition_key"]),
-                    pa.array(out["n_nodes"], pa.int32()),
-                    pa.array(out["n_bytes_in"], pa.int64()),
-                    pa.array(out["had_error"], pa.int32()),
-                ],
-                names=[f.name for f in EXTRACTED_LINEAGE_SCHEMA.fields],
-            )
-
-    return fn
-
-
-NATIVE_VERSIONS = {"pagexml": "pagexml-1.0.0", "pdf": "pdf-1.0.0"}
-
-
-def native_extract_udf(fmt: str, dedup: bool = True):
-    """The PAGE-XML/PDF twin of `lineage_extract_udf`: same wave-committed
-    lineage contract (every input document yields exactly one output row;
-    fail-whole parses emit an empty row with had_error=1 so the checkpoint
-    counters account for them), but the per-document extraction is the
-    native leg — parse_pagexml/parse_pdf + the content filter + the
-    reading-order assembly (assemble_doc_text, differentially gated
-    against the DataFrame-agg form). The job synthesizes url/warc_ts from
-    doc_id and carries the payload in the `html` column so the wave
-    machinery (salting, J9 sort, checkpoints, resume) is shared verbatim.
-    """
-    import pyarrow as pa
-
-    from .api import _dedup_record_batches, _span_list_array
-
-    if fmt == "pagexml":
-        from .pagexml import assemble_doc_text, parse_pagexml as parse
-
-        items_of = lambda p: p["nodes"]  # noqa: E731
-    elif fmt == "pdf":
-        from .pdf import assemble_doc_text, parse_pdf as parse
-
-        items_of = lambda p: p["runs"]  # noqa: E731
-    else:
-        raise ValueError(f"unknown native format: {fmt!r}")
-    ver = NATIVE_VERSIONS[fmt]
-
-    def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        if dedup:
-            batches = _dedup_record_batches(batches)
-        for rb in batches:
-            idx = {n: i for i, n in enumerate(rb.schema.names)}
-            out = {k: [] for k in ("extracted_text", "n_blocks", "spans",
-                                   "n_nodes", "n_bytes_in", "had_error")}
-            for h in rb.column(idx["html"]):
-                payload = h.as_py()
-                # belt over the parsers' fail-whole braces: ANY escaping
-                # exception still becomes a had_error row, never a failed
-                # wave (same contract as lineage_extract_udf)
-                try:
-                    parsed = parse(payload) if payload is not None else None
-                    if parsed is None:
-                        txt, nb, sp, nn, err = "", 0, [], 0, 1
-                    else:
-                        items = items_of(parsed)
-                        txt, nb, sp = assemble_doc_text(items)
-                        nn, err = len(items), 0
-                except Exception:
-                    txt, nb, sp, nn, err = "", 0, [], 0, 1
-                out["extracted_text"].append(txt)
-                out["n_blocks"].append(nb)
-                out["spans"].append(sp)
-                out["n_nodes"].append(nn)
-                out["n_bytes_in"].append(
-                    len(payload) if payload is not None else 0)
-                out["had_error"].append(err)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column(idx["url"]),
-                    rb.column(idx["warc_ts"]),
-                    pa.array(out["extracted_text"], pa.string()),
-                    pa.array(out["n_blocks"], pa.int32()),
-                    _span_list_array(pa, out["spans"]),
-                    pa.array([ver] * rb.num_rows, pa.string()),
-                    rb.column(idx["partition_key"]),
-                    pa.array(out["n_nodes"], pa.int32()),
-                    pa.array(out["n_bytes_in"], pa.int64()),
-                    pa.array(out["had_error"], pa.int32()),
-                ],
-                names=[f.name for f in EXTRACTED_LINEAGE_SCHEMA.fields],
-            )
-
-    return fn
 
 
 def done_partition_keys(spark: SparkSession, cfg: ExtractJobConfig) -> set[int]:
@@ -250,13 +93,10 @@ def run_extract_job(spark: SparkSession, pages: DataFrame, cfg: ExtractJobConfig
         wave_df = (
             keyed.filter(F.col("partition_key").isin([int(x) for x in wave_keys]))
             .repartition(len(wave_keys), "partition_key")
-            .sortWithinPartitions(  # J9 inside the UDF: one shuffle total
-                F.col("url").asc(), F.col("warc_ts").desc(), F.xxhash64("html").desc()
-            )
+            # J9 inside the UDF: one shuffle total
+            .sortWithinPartitions(F.col("url").asc(), *latest_first())
             .mapInArrow(
-                lineage_extract_udf(cfg.model_path)
-                if cfg.input_format == "html"
-                else native_extract_udf(cfg.input_format),
+                extract_udf(EXTRACTED_LINEAGE_SCHEMA, cfg.input_format, cfg.model_path),
                 schema=EXTRACTED_LINEAGE_SCHEMA,
             )
         )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .fixtures import SEED_BASE
+from .parse import join_spans
 
 PAGEXML_NODES_SCHEMA = T.StructType(
     [
@@ -201,13 +202,7 @@ def assemble_doc_text(nodes: list) -> tuple:
         key=lambda n: (n["part_id"], n["ro_index"], n["y1"], n["x1"],
                        n["node_id"]),
     )
-    parts, spans, off = [], [], 0
-    for n in kept:
-        ln = len(n["text"])
-        spans.append((n["node_id"], off, off + ln))
-        parts.append(n["text"])
-        off += ln + 1
-    return "\n".join(parts), len(spans), spans
+    return join_spans((n["node_id"], n["text"]) for n in kept)
 
 
 def pagexml_doc_text(nodes: DataFrame) -> DataFrame:

@@ -1,7 +1,8 @@
 """sparkdu HTML block parser — SPEC.md v1, batch/array-oriented.
 
-Runs inside Arrow UDF workers (`mapInPandas`): one call handles a pandas
-batch of pages and emits columnar node arrays. Independent implementation of
+Runs inside the Python worker of the extraction `mapInArrow`, one document
+per call (`extract_doc`, driven by api.extract_batches); the staged path's
+node table calls `parse_blocks` the same way. Independent implementation of
 SPEC.md (the normative twin lives in oracle/extract.py; sparkdu must never
 import it — byte-agreement between the two is the correctness gate, see
 SURVEY.md SS5.2).
@@ -274,12 +275,30 @@ def rule_is_content(link_density, anc_boiler):
     return (not anc_boiler) and link_density <= 0.5
 
 
+def join_spans(items, tail=None):
+    """Reading-ordered (node_id, text) pairs -> (newline-joined text,
+    n_blocks, spans), spans being (node_id, start, end) offsets into the
+    text (SPEC SS5). `tail` (the truncation marker) is joined after the
+    last block and belongs to no span. Shared by the HTML, PAGE-XML and
+    PDF assembly."""
+    parts, spans, off = [], [], 0
+    for nid, text in items:
+        n = len(text)
+        spans.append((nid, off, off + n))
+        parts.append(text)
+        off += n + 1
+    if tail is not None:
+        parts.append(tail)
+    return "\n".join(parts), len(spans), spans
+
+
 def extract_doc(html_bytes, model=None):
     """Fused per-doc path: decode -> parse -> classify -> order -> assemble.
 
-    Returns (extracted_text, n_blocks, spans, version). Pure Python str
-    assembly (SURVEY SS7 hard-part 1: no Spark string fn may touch the
-    result afterwards).
+    The HTML leg's per-document function (api.extract_batches): returns
+    (extracted_text, n_blocks, spans, n_nodes), n_nodes counting every
+    parsed block, kept or not. Pure Python str assembly (SURVEY SS7
+    hard-part 1: no Spark string fn may touch the result afterwards).
     """
     html_str, truncated = sniff_decode(html_bytes)
     blocks = parse_blocks(html_str)
@@ -288,19 +307,11 @@ def extract_doc(html_bytes, model=None):
         keep = _score_blocks(blocks, model)
     else:
         keep = [rule_is_content(r[7], r[11]) for r in blocks]
-    parts = []
-    spans = []  # (node_id, start, end) tuples — columnarized by the caller
-    off = 0
-    for r, k in zip(blocks, keep):
-        if not k:
-            continue
-        n = r[5]
-        spans.append((r[0], off, off + n))
-        parts.append(r[4])
-        off += n + 1
-    if truncated:
-        parts.append(TRUNCATION_MARKER)
-    return "\n".join(parts), len(spans), spans, model_version(model)
+    text, n_blocks, spans = join_spans(
+        ((r[0], r[4]) for r, k in zip(blocks, keep) if k),
+        TRUNCATION_MARKER if truncated else None,
+    )
+    return text, n_blocks, spans, len(blocks)
 
 
 def _score_blocks(blocks, model):

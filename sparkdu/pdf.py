@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from .fixtures import SEED_BASE
+from .parse import join_spans
 
 PDF_RUNS_SCHEMA = T.StructType(
     [
@@ -762,13 +763,7 @@ def assemble_doc_text(runs: list) -> tuple:
         (r for r in runs if r["size"] >= MIN_CONTENT_SIZE),
         key=lambda r: (r["part_id"], -r["y"], r["x"], r["run_id"]),
     )
-    parts, spans, off = [], [], 0
-    for r in kept:
-        ln = len(r["text"])
-        spans.append((r["run_id"], off, off + ln))
-        parts.append(r["text"])
-        off += ln + 1
-    return "\n".join(parts), len(spans), spans
+    return join_spans((r["run_id"], r["text"]) for r in kept)
 
 
 def pdf_doc_text(runs: DataFrame) -> DataFrame:

@@ -30,6 +30,20 @@ def _reap_stale_local_dirs(root: str) -> None:
             pass  # pid exists but not ours to signal — leave it
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: a quarter of physical memory (MemTotal), at most
+    16g; 16g when MemTotal is unreadable. A fixed 16g was OOM-killed on
+    16 GB hosts, where the heap and the Python workers share the RAM."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(16 * 1024, int(line.split()[1]) // 4096)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "16g"
+
+
 def get_spark(
     app: str = "sparkdu",
     master: str | None = None,
@@ -62,7 +76,8 @@ def get_spark(
         # TIMESTAMP_MICROS makes footer min/max available for the
         # snapshots.annotate_stats/plan_files file-skipping path
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARKDU_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARKDU_DRIVER_MEM", default_driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     # local mode: shuffle/spill to tmpfs — the html payload shuffles once and

@@ -4,7 +4,7 @@ The reference is batch-only [U]; the north rule is batch [B:14]. This module
 exists to show the engine's operators compose with streaming ingestion: a
 file-source stream of `events`-shaped parquet, watermarked 10-minute tumbling
 windows per event_type, and a streaming variant of the extraction stage
-(pages arriving as files -> mapInPandas extraction -> append sink).
+(pages arriving as files -> mapInArrow extraction -> append sink).
 
 Never on the correctness path; covered by tests/test_streaming.py using
 Trigger.AvailableNow so it runs bounded in CI.
